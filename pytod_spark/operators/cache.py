@@ -42,3 +42,13 @@ def release_all() -> int:
         except Exception:
             pass
     return n
+
+
+def cut_lineage(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint ``df``: reliable when the session has a
+    checkpoint dir, executor-local otherwise. The choice is made up
+    front, so a compute error inside ``df`` propagates once instead of
+    being mistaken for a missing checkpoint dir and re-run."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint()
+    return df.localCheckpoint()

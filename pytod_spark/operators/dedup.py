@@ -385,13 +385,7 @@ def connected_components(
     """
     from pyspark import StorageLevel
 
-    from .cache import track
-
-    def _cut_lineage(df: DataFrame) -> DataFrame:
-        try:
-            return df.checkpoint()  # reliable; needs setCheckpointDir
-        except Exception:
-            return df.localCheckpoint()
+    from .cache import cut_lineage, track
 
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     edges = track(
@@ -399,7 +393,7 @@ def connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = _cut_lineage(
+    labels = cut_lineage(
         edges.select("src").distinct().select(
             F.col("src").alias("node"), F.col("src").alias("lbl")
         )
@@ -418,7 +412,7 @@ def connected_components(
         # the min invariant), so the hop stays in-component and only
         # decreases labels — doubling how far a round propagates.
         parent = stepped.select(F.col("node").alias("__pn"), F.col("lbl").alias("__pl"))
-        new_labels = _cut_lineage(
+        new_labels = cut_lineage(
             stepped.join(parent, stepped["lbl"] == parent["__pn"], "left").select(
                 "node", F.least(F.col("lbl"), F.coalesce("__pl", "lbl")).alias("lbl")
             )

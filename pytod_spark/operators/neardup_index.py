@@ -332,15 +332,9 @@ def minhash_index_refresh(
     eagerly CHECKPOINTED (reliable when the session has a checkpoint
     dir, executor-local otherwise) before the first append — a
     persist() alone does NOT survive the refresh."""
-    from .cache import track
+    from .cache import cut_lineage, track
 
     spark = new_df.sparkSession
-
-    def _cut_lineage(df: DataFrame) -> DataFrame:
-        try:
-            return df.checkpoint()  # reliable; needs setCheckpointDir
-        except Exception:
-            return df.localCheckpoint()
     meta = _load_meta(spark, ref)
     n, threshold = meta["shingle_n"], meta["threshold"]
     eff_cap = cap if cap is not None else DEFAULT_BUCKET_CAP
@@ -358,7 +352,7 @@ def minhash_index_refresh(
         F.col(id_col), F.col(text_col),
         F.sha2(F.col(text_col), 256).alias("__sha"),
     )
-    remainder = _cut_lineage(
+    remainder = cut_lineage(
         fingerprinted.join(
             stored_keys, fingerprinted[id_col] == F.col("__sid"), "left"
         ).where(F.col("__ssha").isNull() | (F.col("__ssha") != F.col("__sha")))
@@ -388,7 +382,7 @@ def minhash_index_refresh(
     )
     # cross scans the stored docs/bands paths — checkpoint before the
     # appends below or refreshByPath re-derives it mid-write
-    new_pairs = _cut_lineage(cross.unionByName(within))
+    new_pairs = cut_lineage(cross.unionByName(within))
     n_new_pairs = new_pairs.count()
 
     sigs = minhash_signatures(delta, id_col, text_col, n, shingled=sh_delta)

@@ -11,9 +11,9 @@ content):
     violations (user RowConstraint predicates, validation/
     constraints.py) -> drift scores (pytod-parity detector per
     partition)
-  stage B (cheap, recomputed every run from stage-A output):
-    global score threshold -> drift violations/labels ->
-    per-partition pass/fail verdicts + metrics
+  stage B (cheap, recomputed every run from the completion markers):
+    merged KLL score sketch -> global score threshold -> drift
+    violations/labels -> per-partition pass/fail verdicts + metrics
 
 Scale/skew posture:
 * every check is a single grouped aggregation / anti-join — partial
@@ -29,18 +29,23 @@ Scale/skew posture:
   frame and run as concurrent driver jobs (standard multi-job
   scheduler pattern): plan/commit overheads overlap, the executor
   pool stays saturated, and each check computes its own per-partition
-  summary from the in-memory frame it is about to write — stage B
-  never re-reads what stage A just held in memory;
+  summary from the in-memory frame it is about to write. The checks
+  start without waiting for the feature frame to be materialized: the
+  first job to reach a partition caches it while the others plan;
 * stage-A outputs are written with dynamic partition overwrite
   (partitionBy(partition_col) + mode=overwrite), so re-running a
   partition after a crash replaces, never duplicates — this is what
   makes resume idempotent;
 * resume skips partitions with completion markers
-  (<run_dir>/markers/<partition>.json holding per-check lineage
-  counts) — kill the job mid-run, rerun, and only unfinished
-  partitions recompute. On a resumed (partial) run, stage B rebuilds
-  the global threshold and verdicts from the persisted stage-A
-  parquet instead of the in-memory shortcut;
+  (<run_dir>/markers/<partition>.json, replaced atomically) — kill
+  the job mid-run, rerun, and only unfinished partitions recompute.
+  Each marker holds the partition's stage-A summary: verdict counts,
+  constraint violation rates and a KLL sketch of its drift scores.
+  Stage B, on fresh, resumed and incremental runs alike, reads the
+  markers, merges the sketches into the global threshold on the
+  driver (no Spark job) and rewrites drift_violations in one pruned
+  pass over drift_scores (in the drift thread when every partition
+  is pending, overlapped with the other checks);
 * incremental revalidation (run_incremental): markers also record a
   per-partition content fingerprint (xor of row hashes + count), so
   a nightly re-run recomputes only partitions whose data changed —
@@ -63,14 +68,17 @@ hence not the engine default.
 
 from __future__ import annotations
 
+import base64
 import json
 import logging
 import os
+import shutil
 import time
 from collections.abc import Iterable
 from concurrent.futures import ThreadPoolExecutor, as_completed
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..detectors import ALL_DETECTORS
@@ -83,7 +91,7 @@ from .constraints import (
     validate_constraints,
 )
 from .features import FEATURE_COLS, derive_features
-from .io import read_string_partitioned
+from .io import has_parquet, read_string_partitioned, rows_by_partition
 
 log = logging.getLogger(__name__)
 
@@ -101,6 +109,60 @@ _STAGE_A_OUTPUTS = (
     "constraint_violations",
     "constraint_summary",
 )
+
+# KLL sketch size for the drift scores. A sketch holds its first k
+# items exactly: up to k scored rows the merged threshold is the exact
+# rank quantile (= percentile_approx at accuracy 10000) whatever the
+# merge order. Above k it compacts with a random coin, so fresh and
+# incremental runs over one snapshot may differ by the rank error
+# (gated <= 1e-3 at 2M rows). Measured: k=4000 over 5 005 rows gave
+# 2-3 distinct merged p90s across merge orders, k=8192 one.
+KLL_K = 8192
+
+
+def score_sketch(col: str) -> Column:
+    """Aggregate: the KLL sketch of one partition's drift scores."""
+    return F.kll_sketch_agg_double(col, F.lit(KLL_K))
+
+
+def merged_quantile(
+    spark: SparkSession, sketches: Iterable[str | None], q: float
+) -> float | None:
+    """Quantile ``q`` of the union of base64 KLL double sketches (one
+    per partition); None when there is no sketch to merge (no scored
+    rows anywhere). The sketches become literals merged pairwise in a
+    balanced tree over a one-row local relation, so the optimizer
+    folds the whole expression on the driver — no Spark job."""
+    cols = [F.lit(base64.b64decode(s)) for s in sketches if s]
+    if not cols:
+        return None
+    while len(cols) > 1:
+        cols = [
+            F.kll_sketch_merge_double(*cols[i:i + 2]) if i + 1 < len(cols)
+            else cols[i]
+            for i in range(0, len(cols), 2)
+        ]
+    one_row = spark.sql("SELECT * FROM VALUES (1) AS t(one)")
+    return one_row.select(
+        F.kll_sketch_get_quantile_double(cols[0], F.lit(q))
+    ).collect()[0][0]
+
+
+@contextmanager
+def job_group(spark: SparkSession, group_id: str, description: str):
+    """Tag every job this thread submits with ``group_id``; the
+    thread's previous group, description and cancel flag are restored
+    afterwards."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group_id, description)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
 
 
 def partition_fingerprints(df: DataFrame, pcol: str, key_cols: list[str]) -> DataFrame:
@@ -188,22 +250,16 @@ class ValidationSuite:
         )
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
-    def _judge_constraint_rates(self, rate_rows) -> dict:
-        """Per-partition count of FAILED rules: persisted/collected
-        (partition, constraint, violation_rate) rows judged against
-        the current rule budgets (rules absent from the current set
-        are ignored — a removed rule changes the sig and forces a
-        recompute anyway)."""
-        budgets = {c.name: c.max_violation_rate for c in self.constraints}
-        failed: dict = {}
-        for r in rate_rows:
-            if r["constraint"] not in budgets:
-                continue
-            part = r[self.partition_col]
-            failed.setdefault(part, 0)
-            if (r["violation_rate"] or 0.0) > budgets[r["constraint"]]:
-                failed[part] += 1
-        return failed
+    def _judge_constraint_rates(self, rates: dict) -> int:
+        """Count of FAILED rules for one partition: its persisted
+        {constraint: violation_rate} judged against the current rule
+        budgets (rules absent from the current set are ignored — a
+        removed rule changes the sig and forces a recompute anyway)."""
+        return sum(
+            1
+            for c in self.constraints
+            if (rates.get(c.name) or 0.0) > c.max_violation_rate
+        )
 
     # ------------------------------------------------------------ helpers
 
@@ -231,16 +287,19 @@ class ValidationSuite:
         except (OSError, json.JSONDecodeError):
             return None
 
-    def _invalidate_partition(self, run_dir: str, part: str) -> None:
-        """Drop one partition's completion marker and its hive
-        subdirectory in every stage-A output, so the next resumed run
-        recomputes it from scratch with no stale files surviving."""
-        import shutil
+    def _invalidate_partitions(self, run_dir: str, parts: Iterable[str]) -> None:
+        """Drop these partitions' completion markers and their hive
+        subdirectories in every stage-A output, so they recompute from
+        scratch with no stale files surviving."""
         from urllib.parse import unquote
 
-        mp = self._marker_path(run_dir, part)
-        if os.path.exists(mp):
-            os.remove(mp)
+        parts = {str(p) for p in parts}
+        if not parts:
+            return
+        for part in parts:
+            mp = self._marker_path(run_dir, part)
+            if os.path.exists(mp):
+                os.remove(mp)
         pref = f"{self.partition_col}="
         for name in _STAGE_A_OUTPUTS:
             base = os.path.join(run_dir, name)
@@ -248,20 +307,48 @@ class ValidationSuite:
                 continue
             for d in os.listdir(base):
                 # Spark %-escapes special chars in hive dir names
-                if d.startswith(pref) and unquote(d[len(pref):]) == str(part):
+                if d.startswith(pref) and unquote(d[len(pref):]) in parts:
                     shutil.rmtree(os.path.join(base, d), ignore_errors=True)
 
-    @staticmethod
-    def _has_parquet(path: str) -> bool:
-        """True when ``path`` holds at least one parquet file. A
-        partitioned write whose frame was EMPTY (the healthy
-        zero-violation case) emits only _SUCCESS — reading it back
-        would die on schema inference, so the resume path must treat
-        it as 'no rows', not crash. (Shared with the report reader —
-        validation/io.py.)"""
-        from .io import has_parquet
+    def _write_marker(self, run_dir: str, part: str, marker: dict) -> None:
+        """Write a completion marker atomically: a crash mid-write
+        leaves at most a stray .tmp file (which _done_partitions does
+        not list), never a torn marker."""
+        path = self._marker_path(run_dir, part)
+        tmp = f"{path}.tmp"
+        with open(tmp, "w") as fh:
+            json.dump(marker, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
 
-        return has_parquet(path)
+    def _label_drift(
+        self, spark: SparkSession, scores: DataFrame | None, run_dir: str,
+        sketches: Iterable[str | None],
+    ) -> tuple[float | None, dict]:
+        """The global drift threshold — the (1 - contamination) quantile
+        of the merged per-partition KLL sketches — and the
+        drift_violations it implies, rewritten whole from ``scores``:
+        dynamic partition overwrite only touches partitions with >= 1
+        violation, so a partition that dropped to zero (or left the
+        table) would otherwise keep its old violation files. Returns
+        (threshold, {partition: n_outliers}); the threshold is None
+        when nothing was scored."""
+        shutil.rmtree(os.path.join(run_dir, "drift_violations"), ignore_errors=True)
+        thr = merged_quantile(spark, sketches, 1 - self.contamination)
+        if thr is None or scores is None:
+            return thr, {}
+        self._write_partitioned(
+            scores.where(F.col("score_z") > F.lit(thr))
+            .withColumn("label", F.lit(1))
+            .withColumn("threshold", F.lit(thr)),
+            run_dir, "drift_violations", compact=False,
+        )
+        # per-partition outlier counts from the written files' parquet
+        # footers: exact, and no second pass over the scores
+        return thr, rows_by_partition(
+            os.path.join(run_dir, "drift_violations"), self.partition_col
+        )
 
     def _write_partitioned(
         self, df: DataFrame, run_dir: str, name: str, compact: bool = True,
@@ -391,8 +478,6 @@ class ValidationSuite:
             # dynamic partition overwrite only replaces partitions the
             # new run writes, so a partition whose re-run produces ZERO
             # violations would otherwise keep its stale violation files
-            import shutil
-
             for sub in ("markers", *_STAGE_A_OUTPUTS, "verdicts"):
                 shutil.rmtree(os.path.join(run_dir, sub), ignore_errors=True)
         os.makedirs(os.path.join(run_dir, "markers"), exist_ok=True)
@@ -403,6 +488,14 @@ class ValidationSuite:
             all_parts = sorted(partitions)
         else:
             all_parts = [r[0] for r in df.select(pcol).distinct().collect()]
+        # the checks this run performs; markers record them
+        checks = ["stats", "uniqueness", "drift_scores"]
+        if parent is not None:
+            checks.append("ri")
+        if reference is not None or reference_profile is not None:
+            checks.append("dist_drift")
+        if self.constraints:
+            checks.append("constraints")
         done = self._done_partitions(run_dir) if resume else set()
         if done:
             # a marker only certifies the checks that RAN when it was
@@ -410,17 +503,15 @@ class ValidationSuite:
             # (a reference/profile added since -> dist_drift; a parent
             # added since -> ri) must recompute the partition, not
             # silently report the uncovered check as passed
-            required = {"stats", "uniqueness", "drift_scores"}
-            if parent is not None:
-                required.add("ri")
-            if reference is not None or reference_profile is not None:
-                required.add("dist_drift")
-            if self.constraints:
-                required.add("constraints")
+            required = set(checks)
             sig = self._constraints_sig()
 
             def _covered(part: str) -> bool:
+                # a missing/torn marker reads as {}; a marker without
+                # the stage-B summary predates it — all recompute
                 marker = self._read_marker(run_dir, part) or {}
+                if "summary" not in marker:
+                    return False
                 if not required <= set(marker.get("checks") or []):
                     return False
                 # rule-set coverage: a marker written under different
@@ -429,9 +520,7 @@ class ValidationSuite:
                 return sig is None or marker.get("constraints_sig") == sig
 
             under_covered = sorted(part for part in done if not _covered(part))
-            for part in under_covered:
-                self._invalidate_partition(run_dir, part)
-                done.discard(part)
+            done.difference_update(under_covered)
             if under_covered:
                 log.warning(
                     "resume: %d partition marker(s) do not cover the "
@@ -441,14 +530,22 @@ class ValidationSuite:
                 )
         pending = sorted(set(all_parts) - done)
         fresh_full = not done and set(pending) == set(all_parts)
+        # every pending partition starts clean: a crashed or
+        # under-covered earlier attempt must not leave files that this
+        # run's output (or the footer counts below) would pick up
+        self._invalidate_partitions(run_dir, pending)
         stage_a_rows = 0
-        # in-thread summaries keyed by partition value (fresh-full path)
+        # per-partition stage-A summaries collected by the check
+        # threads, persisted into each partition's marker
         sums: dict[str, dict] = {
-            "n_rows": {}, "dup_keys": {}, "extra_rows": {}, "orphans": {},
-            "outliers": {}, "drift_n": {}, "psi_max": {}, "dist_drifted": {},
-            "fp": {}, "constraint_viol": {}, "constraint_failed": {},
+            "n_rows": {}, "n_dup_keys": {}, "n_extra_rows": {},
+            "n_orphans": {}, "n_constraint_viol": {}, "violation_rate": {},
+            "psi_max": {}, "n_dist_drifted": {}, "drift_n": {},
+            "kll_sketch": {}, "fp": {},
         }
-        thr_box: dict[str, float] = {}
+        # fresh runs: (threshold, outlier counts) from the drift thread
+        labeled: dict = {}
+        group = os.path.basename(os.path.normpath(run_dir))
 
         tp = time.time()
         if pending:
@@ -469,8 +566,10 @@ class ValidationSuite:
                 pcol, "row_id", *self.key_cols, "content_sha256",
                 *FEATURE_COLS, "features",
             ).persist()
-            stage_a_rows = feats.count()
-            tp = _mark("features", tp)
+            # no feats.count() barrier: the checks start at once and
+            # the first job to reach a partition caches it (Spark's
+            # block locks keep the others from recomputing it), so
+            # the feature pass overlaps the checks' plan building
 
             def _job_stats():
                 stats = column_stats_frame(feats, pcol)
@@ -485,8 +584,8 @@ class ValidationSuite:
                     F.count(F.lit(1)).alias("k"),
                     F.sum(F.col("n_copies") - 1).alias("x"),
                 ).collect():
-                    sums["dup_keys"][r[pcol]] = r["k"]
-                    sums["extra_rows"][r[pcol]] = r["x"]
+                    sums["n_dup_keys"][r[pcol]] = r["k"]
+                    sums["n_extra_rows"][r[pcol]] = r["x"]
                 viol.unpersist()
 
             def _job_ri():
@@ -495,36 +594,33 @@ class ValidationSuite:
                 viol = ri_violations(
                     feats, parent, list(ri_keys),
                     child_cols=[pcol, *self.key_cols, "content_sha256"],
-                ).persist()
+                )
                 self._write_partitioned(viol, run_dir, "ri_violations", n_values=len(pending))
-                for r in viol.groupBy(pcol).count().collect():
-                    sums["orphans"][r[pcol]] = r["count"]
-                viol.unpersist()
+                # counts from the written files' footers: no second job
+                sums["n_orphans"].update(rows_by_partition(
+                    os.path.join(run_dir, "ri_violations"), pcol, pending
+                ))
 
             def _job_constraints():
                 if not self.constraints:
                     return
                 # violations: one map-only codegen pass over the cached
                 # feature frame (no shuffle); summary: one partial-agg
-                # groupBy to model size. Both persisted partitioned —
-                # the summary is what a resumed stage B rebuilds
-                # per-constraint verdicts from.
+                # groupBy to model size. Both persisted partitioned for
+                # the report; their counts and rates go into the marker.
                 viol = row_constraint_violations(
                     feats,
                     self.constraints,
                     keep_cols=[pcol, *self.key_cols, "content_sha256"],
-                ).persist()
+                )
                 self._write_partitioned(
                     viol, run_dir, "constraint_violations",
                     n_values=len(pending),
                 )
-                if fresh_full:
-                    # summary collects feed stage B's in-memory fast
-                    # path only; a resumed run rebuilds from parquet
-                    # (same gate as _job_drift)
-                    for r in viol.groupBy(pcol).count().collect():
-                        sums["constraint_viol"][r[pcol]] = r["count"]
-                viol.unpersist()
+                sums["n_constraint_viol"].update(rows_by_partition(
+                    os.path.join(run_dir, "constraint_violations"), pcol,
+                    pending,
+                ))
                 # the persisted summary carries counts + rates only —
                 # `passed` is a function of the CURRENT budgets and is
                 # always judged at stage B (_judge_constraint_rates),
@@ -537,13 +633,12 @@ class ValidationSuite:
                     summ, run_dir, "constraint_summary",
                     n_values=len(pending),
                 )
-                if fresh_full:
-                    sums["constraint_failed"].update(
-                        self._judge_constraint_rates(
-                            summ.select(pcol, "constraint", "violation_rate")
-                            .collect()
-                        )
-                    )
+                for r in summ.select(
+                    pcol, "constraint", "violation_rate"
+                ).collect():
+                    sums["violation_rate"].setdefault(r[pcol], {})[
+                        r["constraint"]
+                    ] = r["violation_rate"]
                 summ.unpersist()
 
             def _job_drift():
@@ -601,36 +696,26 @@ class ValidationSuite:
                 ).persist()
                 self._write_partitioned(keyed, run_dir, "drift_scores", compact=False)
                 scores.unpersist()
+                # per-partition row count + KLL sketch of score_z: the
+                # marker's drift summary, merged into the global
+                # threshold at stage B (one grouped aggregate, KB-scale
+                # shuffle)
+                for r in keyed.groupBy(pcol).agg(
+                    F.count(F.lit(1)).alias("n"),
+                    score_sketch("score_z").alias("sk"),
+                ).collect():
+                    sums["drift_n"][r[pcol]] = r["n"]
+                    sums["kll_sketch"][r[pcol]] = base64.b64encode(
+                        bytes(r["sk"])
+                    ).decode("ascii")
                 if fresh_full:
-                    # global threshold + drift violations directly from
-                    # the in-memory scores (stage-B fast path); exact
-                    # percentile with numpy linear interpolation
-                    # (pytod base.py:425-426 parity)
-                    # approx_percentile sketch: partial-aggregated,
-                    # no single-reducer funnel of every score (the
-                    # only viable global-quantile plan at 10^12 rows;
-                    # accuracy 1e-4 of rank, far tighter than the
-                    # contamination semantics need)
-                    thr = keyed.agg(
-                        F.percentile_approx(
-                            "score_z", 1 - self.contamination, 10000
-                        ).alias("t")
-                    ).collect()[0]["t"]
-                    thr_box["t"] = thr
-                    self._write_partitioned(
-                        keyed.where(F.col("score_z") > F.lit(thr)).withColumn(
-                            "label", F.lit(1)
-                        ).withColumn("threshold", F.lit(thr)),
-                        run_dir,
-                        "drift_violations",
-                        compact=False,
+                    # every partition is pending: threshold and label
+                    # from the in-memory scores here, overlapped with
+                    # the other checks, instead of re-reading them at
+                    # stage B
+                    labeled["thr"], labeled["outliers"] = self._label_drift(
+                        spark, keyed, run_dir, sums["kll_sketch"].values()
                     )
-                    for r in keyed.groupBy(pcol).agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum((F.col("score_z") > F.lit(thr)).cast("long")).alias("o"),
-                    ).collect():
-                        sums["drift_n"][r[pcol]] = r["n"]
-                        sums["outliers"][r[pcol]] = r["o"]
                 keyed.unpersist()
 
             def _job_dist_drift():
@@ -729,14 +814,18 @@ class ValidationSuite:
                 self._write_partitioned(
                     rep, run_dir, "dist_drift", n_values=len(pending)
                 )
-                for r in rep.groupBy(pcol).agg(
-                    F.max("psi").alias("pm"),
-                    F.sum(
-                        F.greatest("psi_drifted", "ks_drifted")
-                    ).alias("nd"),
+                # model-sized (|pending| x |features| rows): fold the
+                # per-partition summary on the driver, no shuffle
+                for r in rep.select(
+                    pcol, "psi", "psi_drifted", "ks_drifted"
                 ).collect():
-                    sums["psi_max"][r[pcol]] = float(r["pm"])
-                    sums["dist_drifted"][r[pcol]] = int(r["nd"])
+                    part = r[pcol]
+                    sums["psi_max"][part] = max(
+                        sums["psi_max"].get(part, 0.0), float(r["psi"])
+                    )
+                    sums["n_dist_drifted"][part] = sums["n_dist_drifted"].get(
+                        part, 0
+                    ) + max(r["psi_drifted"], r["ks_drifted"])
                 rep.unpersist()
                 per_val.unpersist()
 
@@ -767,7 +856,8 @@ class ValidationSuite:
 
             def _timed(name, fn):
                 t = time.time()
-                fn()
+                with job_group(spark, f"{group}:{name}", name):
+                    fn()
                 # per-check wall time (threads overlap, so these sum to
                 # more than checks_parallel; the max is the critical path)
                 phase_times[f"check_{name}"] = round(time.time() - t, 2)
@@ -778,199 +868,92 @@ class ValidationSuite:
                     fut.result()  # propagate the first failure
             tp = _mark("checks_parallel", tp)
             feats.unpersist()
+            stage_a_rows = sum(sums["n_rows"].values())
 
-            # --- per-partition lineage markers (written only after every
-            # stage-A output for the partition is committed)
+            # --- per-partition completion markers (written only after
+            # every stage-A output for the partition is committed)
             for part in pending:
-                with open(self._marker_path(run_dir, part), "w") as fh:
-                    json.dump(
-                        {
-                            "partition": part,
-                            "n_rows": sums["n_rows"].get(part, 0),
-                            # record only checks that actually RAN:
-                            # the resume coverage gate above compares
-                            # this list against the next run's request
-                            # (markers from before this rule listed
-                            # "ri" unconditionally — those over-claim
-                            # and a parent-adding resume won't detect
-                            # it; rerun with resume=False there)
-                            "checks": ["stats", "uniqueness", "drift_scores"]
-                            + (["ri"] if parent is not None else [])
-                            + (
-                                ["dist_drift"]
-                                if (reference is not None
-                                    or reference_profile is not None)
-                                else []
-                            )
-                            + (["constraints"] if self.constraints else []),
-                            "constraints_sig": self._constraints_sig(),
-                            "fingerprint": sums["fp"].get(part),
-                            "completed_at": time.time(),
-                        },
-                        fh,
+                summary = {
+                    k: sums[k].get(part, 0)
+                    for k in (
+                        "n_rows", "n_dup_keys", "n_extra_rows", "n_orphans",
+                        "n_constraint_viol", "psi_max", "n_dist_drifted",
+                        "drift_n",
                     )
+                }
+                summary["violation_rate"] = sums["violation_rate"].get(part, {})
+                summary["kll_sketch"] = sums["kll_sketch"].get(part)
+                self._write_marker(run_dir, part, {
+                    "partition": part,
+                    # record only checks that actually RAN: the resume
+                    # coverage gate above compares this list against
+                    # the next run's request
+                    "checks": checks,
+                    "constraints_sig": self._constraints_sig(),
+                    "fingerprint": sums["fp"].get(part),
+                    "summary": summary,
+                    "completed_at": time.time(),
+                })
 
-        # ---------------- stage B: global threshold + verdicts
+        # ---------------- stage B: threshold + verdicts from the markers
         tp = time.time()
-        # None = no drift scores exist anywhere (empty corpus, or a
-        # resumed run whose stage-A drift output was all-empty) — the
-        # metrics JSON records null rather than crashing on an unbound
-        # threshold
-        thr: float | None = None
-        if fresh_full and pending and "t" in thr_box:
-            thr = thr_box["t"]
-            verdict_rows = [
-                {
-                    pcol: part,
-                    "n_rows": int(sums["drift_n"].get(part, 0)),
-                    "n_dup_keys": int(sums["dup_keys"].get(part, 0) or 0),
-                    "n_extra_rows": int(sums["extra_rows"].get(part, 0) or 0),
-                    "n_orphans": int(sums["orphans"].get(part, 0) or 0),
-                    # unrounded count alongside the rounded rate: at
-                    # 10^12-row partitions a handful of outliers rounds
-                    # the rate to 0.0, and the report's drift-example
-                    # gate must still see that violation rows exist
-                    "n_outliers": int(sums["outliers"].get(part, 0)),
-                    "outlier_rate": round(
-                        sums["outliers"].get(part, 0)
-                        / max(1, sums["drift_n"].get(part, 0)),
-                        6,
-                    ),
-                    "psi_max": float(sums["psi_max"].get(part, 0.0)),
-                    "n_dist_drifted": int(sums["dist_drifted"].get(part, 0)),
-                    "n_constraint_viol": int(sums["constraint_viol"].get(part, 0)),
-                    "n_constraint_failed": int(
-                        sums["constraint_failed"].get(part, 0)
-                    ),
-                }
-                for part in all_parts
-            ]
+        summaries = {
+            part: (self._read_marker(run_dir, part) or {}).get("summary") or {}
+            for part in all_parts
+        }
+        # threshold None = no drift scores exist anywhere (empty corpus)
+        # — the metrics JSON records null
+        if fresh_full:
+            thr, outliers = labeled.get("thr"), labeled.get("outliers", {})
         else:
-            # resume / partial path: rebuild globals from persisted
-            # stage-A output (the checkpoint contract). Every read is
-            # gated on _has_parquet: a zero-row artifact (healthy
-            # zero-violation run) has no files to infer a schema from.
-            # drift_violations is fully regenerated below from the
-            # persisted drift_scores under the NEW global threshold —
-            # clear it first: dynamic partition overwrite only touches
-            # partitions with >=1 violation under the new threshold,
-            # so a partition that dropped to zero (or left the table)
-            # would otherwise keep its old violation files while the
-            # verdicts say it passed
-            import shutil
+            with job_group(spark, f"{group}:stage_b", "stage_b"):
+                scores = None
+                if has_parquet(os.path.join(run_dir, "drift_scores")):
+                    # partition-pruned to the CURRENT snapshot: a
+                    # partition dropped from the table keeps its stage-A
+                    # parquet but must not be rewritten into
+                    # drift_violations
+                    scores = read_string_partitioned(
+                        spark, os.path.join(run_dir, "drift_scores")
+                    ).where(F.col(pcol).isin(all_parts))
+                thr, outliers = self._label_drift(
+                    spark, scores, run_dir,
+                    [summaries[p].get("kll_sketch") for p in all_parts],
+                )
 
-            shutil.rmtree(
-                os.path.join(run_dir, "drift_violations"), ignore_errors=True
-            )
-            drift = {}
-            if self._has_parquet(os.path.join(run_dir, "drift_scores")):
-                # restrict to partitions present in the CURRENT
-                # snapshot: after an incremental run, stage-A parquet
-                # may still hold partitions dropped from the table,
-                # and those must not feed the global threshold or be
-                # rewritten into drift_violations. Partition-pruning
-                # predicate — Spark skips the stale hive dirs entirely.
-                scores = read_string_partitioned(spark, 
-                    os.path.join(run_dir, "drift_scores")
-                ).where(F.col(pcol).isin(all_parts))
-                thr = scores.agg(
-                    F.percentile_approx(
-                        "score_z", 1 - self.contamination, 10000
-                    ).alias("t")
-                ).collect()[0]["t"]
-                labeled = scores.withColumn(
-                    "label", (F.col("score_z") > F.lit(thr)).cast("int")
-                )
-                self._write_partitioned(
-                    labeled.where(F.col("label") == 1).withColumn(
-                        "threshold", F.lit(thr)
-                    ),
-                    run_dir,
-                    "drift_violations",
-                )
-                drift = {
-                    r[pcol]: r
-                    for r in labeled.groupBy(pcol).agg(
-                        F.count(F.lit(1)).alias("n"), F.sum("label").alias("o")
-                    ).collect()
-                }
-            uniq = {}
-            if self._has_parquet(os.path.join(run_dir, "uniqueness_violations")):
-                uniq = {
-                    r[pcol]: r
-                    for r in read_string_partitioned(spark, 
-                        os.path.join(run_dir, "uniqueness_violations")
-                    ).where(F.col(pcol).isin(all_parts)).groupBy(pcol).agg(
-                        F.count(F.lit(1)).alias("k"),
-                        F.sum(F.col("n_copies") - 1).alias("x"),
-                    ).collect()
-                }
-            orphans = {}
-            if parent is not None and self._has_parquet(
-                os.path.join(run_dir, "ri_violations")
-            ):
-                orphans = {
-                    r[pcol]: r["count"]
-                    for r in read_string_partitioned(spark, 
-                        os.path.join(run_dir, "ri_violations")
-                    ).where(F.col(pcol).isin(all_parts)).groupBy(pcol).count().collect()
-                }
-            cviol: dict = {}
-            cfail: dict = {}
-            if self.constraints and self._has_parquet(
-                os.path.join(run_dir, "constraint_violations")
-            ):
-                cviol = {
-                    r[pcol]: r["count"]
-                    for r in read_string_partitioned(spark, 
-                        os.path.join(run_dir, "constraint_violations")
-                    ).where(F.col(pcol).isin(all_parts)).groupBy(pcol).count().collect()
-                }
-            if self.constraints and self._has_parquet(
-                os.path.join(run_dir, "constraint_summary")
-            ):
-                cfail = self._judge_constraint_rates(
-                    read_string_partitioned(spark, 
-                        os.path.join(run_dir, "constraint_summary")
-                    )
-                    .where(F.col(pcol).isin(all_parts))
-                    .select(pcol, "constraint", "violation_rate")
-                    .collect()
-                )
-            dist = {}
-            if self._has_parquet(os.path.join(run_dir, "dist_drift")):
-                dist = {
-                    r[pcol]: r
-                    for r in read_string_partitioned(spark, 
-                        os.path.join(run_dir, "dist_drift")
-                    ).where(F.col(pcol).isin(all_parts)).groupBy(pcol).agg(
-                        F.max("psi").alias("pm"),
-                        F.sum(
-                            F.greatest("psi_drifted", "ks_drifted")
-                        ).alias("nd"),
-                    ).collect()
-                }
-            verdict_rows = [
-                {
-                    pcol: part,
-                    "n_rows": int(drift[part]["n"]) if part in drift else 0,
-                    "n_dup_keys": int(uniq[part]["k"]) if part in uniq else 0,
-                    "n_extra_rows": int(uniq[part]["x"] or 0) if part in uniq else 0,
-                    "n_orphans": int(orphans.get(part, 0)),
-                    "n_outliers": int(drift[part]["o"] or 0) if part in drift else 0,
-                    "outlier_rate": round(
-                        (drift[part]["o"] / max(1, drift[part]["n"]))
-                        if part in drift
-                        else 0.0,
-                        6,
-                    ),
-                    "psi_max": float(dist[part]["pm"]) if part in dist else 0.0,
-                    "n_dist_drifted": int(dist[part]["nd"]) if part in dist else 0,
-                    "n_constraint_viol": int(cviol.get(part, 0)),
-                    "n_constraint_failed": int(cfail.get(part, 0)),
-                }
-                for part in all_parts
-            ]
+        def _count(s: dict, key: str, on: bool = True) -> int:
+            return int(s.get(key) or 0) if on else 0
+
+        # a check this run did not request reports zero, whatever an
+        # older marker that covered it recorded
+        dist_on = "dist_drift" in checks
+        verdict_rows = []
+        for part in all_parts:
+            s = summaries[part]
+            n, o = _count(s, "drift_n"), int(outliers.get(part, 0))
+            verdict_rows.append({
+                pcol: part,
+                "n_rows": n,
+                "n_dup_keys": _count(s, "n_dup_keys"),
+                "n_extra_rows": _count(s, "n_extra_rows"),
+                "n_orphans": _count(s, "n_orphans", parent is not None),
+                # unrounded count alongside the rounded rate: at
+                # 10^12-row partitions a handful of outliers rounds the
+                # rate to 0.0, and the report's drift-example gate must
+                # still see that violation rows exist
+                "n_outliers": o,
+                "outlier_rate": round(o / max(1, n), 6),
+                "psi_max": float(s.get("psi_max") or 0.0) if dist_on else 0.0,
+                "n_dist_drifted": _count(s, "n_dist_drifted", dist_on),
+                "n_constraint_viol": _count(
+                    s, "n_constraint_viol", bool(self.constraints)
+                ),
+                # judged against the CURRENT budgets, so a budget-only
+                # retune re-verdicts without recompute
+                "n_constraint_failed": self._judge_constraint_rates(
+                    s.get("violation_rate") or {}
+                ),
+            })
 
         for v in verdict_rows:
             v["uniqueness_pass"] = v["n_dup_keys"] == 0
@@ -1086,11 +1069,15 @@ class ValidationSuite:
         run writes, so a stale partition whose re-run produces ZERO
         violations would otherwise keep its old violation files.
 
-        Stage B then rebuilds the global threshold + verdicts from the
-        union of persisted (unchanged) and recomputed (changed)
-        stage-A output, restricted to partitions present in the
-        CURRENT snapshot — a partition dropped from the table drops
-        out of both the verdicts and the global threshold.
+        Stage B then derives the verdicts from the completion markers
+        of the partitions present in the CURRENT snapshot: the reused
+        (unchanged) markers and the rewritten (changed) ones. Their
+        KLL score sketches merge into the global threshold — a
+        replaced partition just swaps its sketch — so stage B costs
+        O(partitions) plus one partition-pruned pass over drift_scores
+        that rewrites drift_violations and counts the outliers. A
+        partition dropped from the table drops out of both the
+        verdicts and the global threshold.
 
         Returns the same metrics dict as ``run``, plus
         ``incremental_stale`` (partitions invalidated and recomputed)
@@ -1144,8 +1131,7 @@ class ValidationSuite:
             # present in df — hand that to run() so it skips its own
             # discovery scan (a second full pass over the snapshot)
             run_kwargs.setdefault("partitions", sorted(cur))
-        for part in sorted(stale):
-            self._invalidate_partition(run_dir, part)
+        self._invalidate_partitions(run_dir, stale)
         metrics = self.run(spark, df, run_dir, resume=True, **run_kwargs)
         metrics["incremental_stale"] = sorted(stale)
         metrics["incremental_skipped"] = metrics["partitions_resumed_skip"]

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,6 +41,38 @@ def has_parquet(path: str) -> bool:
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
+
+
+def rows_by_partition(
+    path: str, pcol: str, parts: Iterable[str] | None = None
+) -> dict[str, int]:
+    """Row count per partition value (all, or only ``parts``) of a
+    hive-partitioned parquet artifact, summed from the parquet footers
+    on the driver (no Spark job). A partition with no dir counts 0.
+    Spark %-escapes special characters in the dir names."""
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote
+
+    pref = f"{pcol}="
+    want = None if parts is None else {str(p) for p in parts}
+    out: dict[str, int] = dict.fromkeys(want or (), 0)
+    if not os.path.isdir(path):
+        return out
+    for d in os.listdir(path):
+        if not d.startswith(pref):
+            continue
+        value = unquote(d[len(pref):])
+        if want is not None and value not in want:
+            continue
+        n = 0
+        for root, _dirs, files in os.walk(os.path.join(path, d)):
+            n += sum(
+                pq.read_metadata(os.path.join(root, f)).num_rows
+                for f in files
+                if f.endswith(".parquet")
+            )
+        out[value] = n
+    return out
 
 
 def read_string_partitioned(spark: SparkSession, path: str) -> DataFrame:

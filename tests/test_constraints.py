@@ -179,9 +179,9 @@ def test_suite_constraint_resume_and_coverage(spark, corpus, tmp_path):
     }
     assert all(v["constraint_pass"] for v in v1.values())
 
-    # resume again with the same check set: everything skips and the
-    # stage-B resume path rebuilds constraint verdict columns from the
-    # persisted summary (zero-violation run -> no parquet, counts 0)
+    # resume again with the same check set: everything skips and
+    # stage B rebuilds the constraint verdict columns from the marker
+    # summaries (zero-violation run -> counts 0)
     m2 = suite.run(spark, corpus, run_dir, resume=True)
     assert m2["partitions_resumed_skip"] == m1["partitions_total"]
     v2 = {

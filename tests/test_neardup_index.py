@@ -317,3 +317,33 @@ def test_index_catalog_table_refs(spark, tmp_path):
     finally:
         for t in ("docs", "bands", "pairs", "meta"):
             spark.sql(f"DROP TABLE IF EXISTS ndidx_t_{t}")
+
+
+def test_cut_lineage_raises_compute_error_once(spark, tmp_path):
+    """With a checkpoint dir set, a compute error inside the frame
+    being checkpointed propagates from the reliable checkpoint. It is
+    not mistaken for a missing checkpoint dir and re-run through
+    localCheckpoint (which would compute the failing job twice)."""
+    from pyspark.sql.types import LongType
+
+    from pytod_spark.operators.cache import cut_lineage
+
+    calls = tmp_path / "calls.txt"
+
+    @F.udf(LongType())
+    def boom(x):
+        with open(calls, "a") as fh:
+            fh.write("x\n")
+        raise ValueError("planted compute error")
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        with pytest.raises(Exception, match="planted compute error"):
+            cut_lineage(spark.range(1, numPartitions=1).select(boom("id")))
+    finally:
+        # back to no checkpoint dir, the session's state before
+        getattr(jsc, "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert calls.read_text().count("x") == 1

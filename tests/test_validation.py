@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pytod_spark.datagen import generate_repo_table, repo_commits_dim
 from pytod_spark.validation import ValidationSuite
 from pytod_spark.validation.features import derive_features
+from pytod_spark.validation.io import has_parquet
 
 N = 4000
 
@@ -158,11 +159,11 @@ def test_engine_dist_drift_check_flags_injected_snapshot_shift(
         assert "dist_drift" in json.load(fh)["checks"]
 
 
-def test_engine_dist_drift_resume_path_rebuilds_from_parquet(
+def test_engine_dist_drift_resume_path_rebuilds_from_markers(
     spark, corpus, parent, tmp_path
 ):
-    """Stage B on a resumed run must rebuild dist verdicts from the
-    persisted dist_drift parquet, not the in-memory shortcut."""
+    """Stage B on a resumed run rebuilds the dist verdicts from the
+    dist summary persisted in each partition's completion marker."""
     run_dir = str(tmp_path / "run_dist_resume")
     clean = corpus.drop("is_anomaly", "is_orphan")
     shifted = clean.withColumn(
@@ -174,7 +175,7 @@ def test_engine_dist_drift_resume_path_rebuilds_from_parquet(
     )
     suite = ValidationSuite(contamination=0.1)
     suite.run(spark, shifted, run_dir, parent=parent, reference=clean)
-    # second run: nothing pending -> resume path reads dist_drift parquet
+    # second run: nothing pending -> stage B reads the marker summaries
     suite.run(spark, shifted, run_dir, parent=parent, reference=clean)
     verdicts = {
         r["lang"]: r
@@ -384,15 +385,15 @@ def _clean_corpus(spark, n=600):
 def test_resume_into_zero_violation_run_dir_does_not_crash(spark, tmp_path):
     """The healthy zero-violation case: run 1 writes EMPTY
     uniqueness/ri violation artifacts (only _SUCCESS — no parquet
-    files to infer a schema from); a resumed stage-B rebuild must
-    read them as 'no rows', not die on schema inference."""
+    files to infer a schema from); a resumed run must report them as
+    'no rows', not die on schema inference."""
     df, parent = _clean_corpus(spark)
     run_dir = str(tmp_path / "run_zero")
     suite = ValidationSuite(contamination=0.1)
     m1 = suite.run(spark, df, run_dir, parent=parent)
     assert m1["partitions_resumed_skip"] == 0
     # second run, resume=True, all partitions done -> pure stage-B
-    # rebuild from the persisted (possibly empty) artifacts
+    # rebuild from the completion markers
     m2 = suite.run(spark, df, run_dir, parent=parent)
     assert m2["partitions_resumed_skip"] == 3
     verdicts = spark.read.parquet(os.path.join(run_dir, "verdicts")).collect()
@@ -416,7 +417,7 @@ def test_restart_clears_stale_violation_partitions(spark, corpus, parent, tmp_pa
     fixed = (corpus.drop("is_anomaly", "is_orphan")
              .dropDuplicates(["repo", "path", "commit"]))
     suite.run(spark, fixed, run_dir, parent=parent, resume=False)
-    assert not ValidationSuite._has_parquet(
+    assert not has_parquet(
         os.path.join(run_dir, "uniqueness_violations")
     ), "stale violation partitions must be wiped on restart"
     verdicts = spark.read.parquet(os.path.join(run_dir, "verdicts")).collect()
