@@ -355,8 +355,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "drift":
         from pyspark.sql.functions import lit as F_lit
 
-        from .validation.ks import ks_report
-        from .validation.psi import psi_report
+        from .validation.profile import drift_report, snapshot_value_counts
 
         cols = [args.group_col, args.value_col]
         both = (
@@ -364,12 +363,12 @@ def main(argv: list[str] | None = None) -> int:
         ).unionByName(
             load_table(spark, args.cur).select(*cols).withColumn("__is_ref", F_lit(False))
         )
-        psi = psi_report(both, F_col("__is_ref"), args.value_col, args.group_col)
-        ks = ks_report(both, F_col("__is_ref"), args.value_col, args.group_col)
-        rep = psi.withColumnRenamed("drifted", "psi_drifted").join(
-            ks.select(args.group_col, "ks_d", "ks_crit",
-                      F_col("drifted").alias("ks_drifted")),
-            args.group_col,
+        # PSI and KS from one profile through one kernel
+        rep = drift_report(
+            snapshot_value_counts(
+                both, F_col("__is_ref"), args.value_col, [args.group_col]
+            ),
+            args.value_col, [args.group_col],
         )
         print(json.dumps([r.asDict() for r in rep.orderBy(args.group_col).collect()]))
         return 0

@@ -44,11 +44,3 @@ def cosine_sim(a: Column, b: Column) -> Column:
     """Plain cosine similarity (NOT the reference's 1/(|a||b|)-weighted
     variant used by ABOD — that one is ``dot(a,b)/(dot(a,a)*dot(b,b))``)."""
     return dot(a, b) / (norm2(a) * norm2(b))
-
-
-def weighted_cosine(a: Column, b: Column) -> Column:
-    """ABOD's weighted cosine: sum(a*b) / (||a||^2 * ||b||^2).
-
-    Parity: pytod/models/abod.py:16-31 / intermediate_layers.py:238-243.
-    """
-    return dot(a, b) / (dot(a, a) * dot(b, b))

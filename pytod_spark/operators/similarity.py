@@ -774,19 +774,32 @@ def ivf_index_build(
       R/centroids — (cell int, v array<double>)   the frozen model
       R/vectors   — (doc_id, u array<double>)     unit vectors (refine side)
       R/cells     — (cell int, doc_id)            inverted lists (equi-join side)
-      R/meta      — 1 row (version, n_clusters, n_assign, dim)
+      R/meta      — 1 row (version, n_clusters, n_assign, dim); n_assign
+                    is the effective cells per vector, min(n_assign,
+                    number of centroids)
 
     Searches then pay only assignment-of-queries + one cell equi-join +
     refine; corpus growth appends through ``ivf_index_append`` against
     the FROZEN centroids (the standard IVF posture — centroid drift is
     a rebuild decision, surfaced by the cell-balance stats this
-    returns, not something an append silently does)."""
+    returns, not something an append silently does). An input with no
+    non-null vector raises ValueError before anything is written."""
     from ..sources import write_table
 
     spark = df.sparkSession
     u = _unit_frame(df, id_col, features_col)
+    if u.where(F.col("__u").isNotNull()).isEmpty():
+        u.unpersist()
+        raise ValueError(
+            f"ivf_index_build: no non-null {features_col!r} vector to "
+            f"index; nothing was written to {ref!r}"
+        )
     centroids = ivf_fit(df, n_clusters, n_iters, id_col, features_col, unit=u)
     dim = centroids.shape[1]
+    # _assign_probes clamps the probe list to the centroids there are,
+    # so that is how many cells each vector lands in (ivf_index_check
+    # and ivf_index_append read it back from meta)
+    n_assign = min(int(n_assign), len(centroids))
     cdf = spark.createDataFrame(
         [(int(i), [float(x) for x in centroids[i]]) for i in range(len(centroids))],
         "cell int, v array<double>",

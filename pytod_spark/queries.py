@@ -965,8 +965,11 @@ GROUP BY h.event_type ORDER BY h.event_type
 
 def q_ks_events(spark, sf_dir):
     """Two-sample KS drift between even/odd event_id snapshots per
-    event_type — D over the pooled distinct-value support via the
-    bucketed two-pass cumulative counts (validation/ks.py)."""
+    event_type — D over the pooled distinct-value support, from one
+    grouped Arrow kernel that sorts each event_type's distinct values
+    and takes their cumulative counts (validation/ks.py,
+    profile.drift_report). The kernel holds O(distinct values) of one
+    event_type in one Python worker."""
     from .validation.ks import ks_report
 
     ev = load(spark, sf_dir, "events")

@@ -235,21 +235,6 @@ def uniqueness_violations(
     return exact(suspects)
 
 
-def uniqueness_summary(
-    df: DataFrame, keys: Iterable[str], group_cols: Iterable[str] = ()
-) -> DataFrame:
-    keys = list(keys)
-    group_cols = list(group_cols)
-    per_key = df.groupBy(*group_cols, *keys).agg(F.count(F.lit(1)).alias("cnt"))
-    aggs = [
-        F.sum("cnt").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_keys"),
-        F.sum((F.col("cnt") > 1).cast("long")).alias("n_dup_keys"),
-        F.sum(F.when(F.col("cnt") > 1, F.col("cnt") - 1).otherwise(0)).alias("n_extra_rows"),
-    ]
-    return per_key.groupBy(*group_cols).agg(*aggs) if group_cols else per_key.agg(*aggs)
-
-
 def ri_violations(
     child: DataFrame, parent: DataFrame, keys: Iterable[str],
     child_cols: Iterable[str] = (),
@@ -260,21 +245,3 @@ def ri_violations(
     return child.join(parent.select(*keys).distinct(), on=keys, how="left_anti").select(
         *out_cols
     )
-
-
-def ri_summary(
-    child: DataFrame, parent: DataFrame, keys: Iterable[str],
-    group_cols: Iterable[str] = (),
-) -> DataFrame:
-    keys = list(keys)
-    group_cols = list(group_cols)
-    flagged = child.join(
-        parent.select(*keys).distinct().withColumn("__ok", F.lit(1)),
-        on=keys,
-        how="left",
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_child"),
-        F.sum(F.col("__ok").isNull().cast("long")).alias("n_orphans"),
-    ]
-    return flagged.groupBy(*group_cols).agg(*aggs) if group_cols else flagged.agg(*aggs)

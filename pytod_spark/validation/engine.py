@@ -32,10 +32,14 @@ Scale/skew posture:
   summary from the in-memory frame it is about to write. The checks
   start without waiting for the feature frame to be materialized: the
   first job to reach a partition caches it while the others plan;
-* stage-A outputs are written with dynamic partition overwrite
-  (partitionBy(partition_col) + mode=overwrite), so re-running a
-  partition after a crash replaces, never duplicates — this is what
-  makes resume idempotent;
+* row-scale stage-A outputs are written with dynamic partition
+  overwrite (partitionBy(partition_col) + mode=overwrite), and the
+  model-sized ones (stats, constraint_summary, dist_drift: one row per
+  partition, or per partition and feature) are collected once and
+  written from the driver into the same hive layout, one atomically
+  replaced file per partition (io.collect_partitioned) — either way
+  re-running a partition after a crash replaces, never duplicates;
+  this is what makes resume idempotent;
 * resume skips partitions with completion markers
   (<run_dir>/markers/<partition>.json, replaced atomically) — kill
   the job mid-run, rerun, and only unfinished partitions recompute.
@@ -91,7 +95,12 @@ from .constraints import (
     validate_constraints,
 )
 from .features import FEATURE_COLS, derive_features
-from .io import has_parquet, read_string_partitioned, rows_by_partition
+from .io import (
+    collect_partitioned,
+    has_parquet,
+    read_string_partitioned,
+    rows_by_partition,
+)
 
 log = logging.getLogger(__name__)
 
@@ -572,10 +581,14 @@ class ValidationSuite:
             # the feature pass overlaps the checks' plan building
 
             def _job_stats():
-                stats = column_stats_frame(feats, pcol)
-                self._write_partitioned(stats, run_dir, "stats", n_values=len(pending))
-                for r in stats.where(F.col("col_name") == FEATURE_COLS[0]).collect():
-                    sums["n_rows"][r[pcol]] = r["n_rows"]
+                # model-sized (|pending| x |features| rows): one collect
+                # feeds both the driver-side write and the row counts
+                for r in collect_partitioned(
+                    column_stats_frame(feats, pcol),
+                    os.path.join(run_dir, "stats"), pcol,
+                ):
+                    if r["col_name"] == FEATURE_COLS[0]:
+                        sums["n_rows"][r[pcol]] = r["n_rows"]
 
             def _job_uniqueness():
                 viol = uniqueness_violations(feats, self.key_cols, [pcol]).persist()
@@ -605,9 +618,10 @@ class ValidationSuite:
                 if not self.constraints:
                     return
                 # violations: one map-only codegen pass over the cached
-                # feature frame (no shuffle); summary: one partial-agg
-                # groupBy to model size. Both persisted partitioned for
-                # the report; their counts and rates go into the marker.
+                # feature frame (no shuffle), written by Spark; summary:
+                # one partial-agg groupBy to model size, collected once
+                # and written from the driver. Their counts and rates
+                # go into the marker.
                 viol = row_constraint_violations(
                     feats,
                     self.constraints,
@@ -626,20 +640,15 @@ class ValidationSuite:
                 # always judged at stage B (_judge_constraint_rates),
                 # so a budget-only retune never leaves a stale verdict
                 # column behind and never forces a stage-A recompute
-                summ = row_constraint_summary(
-                    feats, self.constraints, [pcol]
-                ).drop("passed").persist()
-                self._write_partitioned(
-                    summ, run_dir, "constraint_summary",
-                    n_values=len(pending),
-                )
-                for r in summ.select(
-                    pcol, "constraint", "violation_rate"
-                ).collect():
+                for r in collect_partitioned(
+                    row_constraint_summary(
+                        feats, self.constraints, [pcol]
+                    ).drop("passed"),
+                    os.path.join(run_dir, "constraint_summary"), pcol,
+                ):
                     sums["violation_rate"].setdefault(r[pcol], {})[
                         r["constraint"]
                     ] = r["violation_rate"]
-                summ.unpersist()
 
             def _job_drift():
                 det_cls = ALL_DETECTORS[self.detector]
@@ -721,10 +730,9 @@ class ValidationSuite:
             def _job_dist_drift():
                 if reference is None and reference_profile is None:
                     return
-                from .ks import ks_report_from_counts
-                from .psi import psi_report_from_counts
                 from .profile import (
                     combine_with_reference_profile,
+                    drift_report,
                     feature_stack_expr,
                     snapshot_value_counts,
                 )
@@ -734,9 +742,9 @@ class ValidationSuite:
                 # The row-scale input (which includes deriving the
                 # reference snapshot's features from raw content)
                 # collapses ONCE into the shared per-(partition,
-                # feature, value) counts profile; PSI and KS both read
-                # the persisted profile, so nothing row-scale is ever
-                # scanned or shuffled twice.
+                # feature, value) counts profile, and one grouped Arrow
+                # kernel turns each (partition, feature) group of it
+                # into its PSI and KS row (profile.drift_report).
                 stack_expr = feature_stack_expr(FEATURE_COLS)
                 if reference_profile is not None:
                     # feature-set gate (one model-sized job on the
@@ -778,7 +786,7 @@ class ValidationSuite:
                         cur_counts,
                         "value",
                         [pcol, "feature"],
-                    ).persist()
+                    )
                 else:
                     ref_feats = derive_features(
                         reference.where(F.col(pcol).isin(pending))
@@ -794,31 +802,22 @@ class ValidationSuite:
                     )
                     per_val = snapshot_value_counts(
                         both, F.col("__is_ref"), "value", [pcol, "feature"]
-                    ).persist()
-                psi = psi_report_from_counts(
-                    per_val, "value", [pcol, "feature"],
-                    threshold=psi_threshold,
-                ).withColumnRenamed("drifted", "psi_drifted")
+                    )
                 # dist_pass ANDs one KS verdict per feature, so at the
                 # raw 5% level a genuinely identical reference would
                 # false-fail ~1-0.95^|features| ~= 30% of partitions.
                 # Bonferroni keeps the per-PARTITION false-fail at 5%.
-                ks = ks_report_from_counts(
+                rep = drift_report(
                     per_val, "value", [pcol, "feature"],
+                    threshold=psi_threshold,
                     alpha=0.05 / len(FEATURE_COLS),
-                ).select(
-                    pcol, "feature", "ks_d", "ks_crit",
-                    F.col("drifted").alias("ks_drifted"),
                 )
-                rep = psi.join(ks, [pcol, "feature"]).persist()
-                self._write_partitioned(
-                    rep, run_dir, "dist_drift", n_values=len(pending)
-                )
-                # model-sized (|pending| x |features| rows): fold the
-                # per-partition summary on the driver, no shuffle
-                for r in rep.select(
-                    pcol, "psi", "psi_drifted", "ks_drifted"
-                ).collect():
+                # model-sized (|pending| x |features| rows): one collect
+                # feeds the driver-side write and the per-partition
+                # summary, folded on the driver
+                for r in collect_partitioned(
+                    rep, os.path.join(run_dir, "dist_drift"), pcol
+                ):
                     part = r[pcol]
                     sums["psi_max"][part] = max(
                         sums["psi_max"].get(part, 0.0), float(r["psi"])
@@ -826,8 +825,6 @@ class ValidationSuite:
                     sums["n_dist_drifted"][part] = sums["n_dist_drifted"].get(
                         part, 0
                     ) + max(r["psi_drifted"], r["ks_drifted"])
-                rep.unpersist()
-                per_val.unpersist()
 
             def _job_fingerprint():
                 # model-sized result (|pending| rows) recorded in each

@@ -90,15 +90,6 @@ def token_stats_udf():
     return pandas_udf(_token_stats_batch, "array<double>")
 
 
-def token_entropy_udf():
-    """Entropy-only variant (kept for the query catalogue)."""
-
-    def _ent(content: pd.Series) -> pd.Series:
-        return _token_stats_batch(content).map(lambda v: v[4])
-
-    return pandas_udf(_ent, "double")
-
-
 def derive_features(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Append the invariant hash + the drift feature vector.
 

@@ -8,34 +8,19 @@ D_crit = c(alpha) * sqrt((n_r + n_c) / (n_r * n_c)), c(0.05) = 1.358.
 
 100-TB shape: pre-aggregate to one row per (group, distinct value)
 with per-side counts (the shared snapshot profile,
-validation/profile.py — PSI reuses the same frame), then the
-strictly-smaller cumulative counts come from the bucketed two-pass
-machinery (operators/ranking.py bucketed_cumsums — windows
-partitioned by (group, bucket), per-bucket offsets by broadcast; no
-single-task sort even when one group holds the whole corpus). The
-max-reduction is one more partial-aggregated groupBy.
+validation/profile.py — PSI reads the same frame), then one grouped
+Arrow kernel per group sorts the distinct values and takes the
+cumulative counts (profile.drift_report). The kernel holds
+O(distinct values) of one group in one Python worker; nothing
+row-scale reaches Python.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.ranking import bucketed_cumsums
-from .profile import snapshot_value_counts
-
-KS_C_ALPHA = 1.358  # c(0.05) — the catalogue/oracle default
-
-
-def _c_alpha(alpha: float) -> float:
-    """Smirnov's large-sample coefficient c(a) = sqrt(-ln(a/2)/2).
-    The default level returns the published 3-decimal table value
-    1.358 (what the DuckDB oracles hardcode), not the raw 1.35810."""
-    if alpha == 0.05:
-        return KS_C_ALPHA
-    return math.sqrt(-math.log(alpha / 2.0) / 2.0)
+from .profile import drift_report, snapshot_value_counts
 
 
 def ks_report(
@@ -47,67 +32,14 @@ def ks_report(
 ) -> DataFrame:
     """Per-group two-sample KS statistic between the rows where
     ``is_ref`` is true and the rest, with an ``alpha``-level drift
-    verdict. ``group_col`` may be a list (e.g. [partition, feature] in
-    the validation engine's distribution-drift check). Callers testing
-    many (group, feature) cells and AND-ing the verdicts into one
-    pass/fail should Bonferroni-correct (pass alpha/#cells-per-verdict)
-    — the engine does (engine.py _job_dist_drift)."""
+    verdict: ``n_ref, n_cur, ks_d, ks_crit, drifted``. ``group_col``
+    may be a list (e.g. [partition, feature]). Callers testing many
+    (group, feature) cells and AND-ing the verdicts into one pass/fail
+    should Bonferroni-correct (pass alpha/#cells-per-verdict) — the
+    engine does (engine.py _job_dist_drift)."""
     group_cols = [group_col] if isinstance(group_col, str) else list(group_col)
     per_val = snapshot_value_counts(df, is_ref, value_col, group_cols)
-    return ks_report_from_counts(per_val, value_col, group_cols, alpha=alpha)
-
-
-def ks_report_from_counts(
-    per_val: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    alpha: float = 0.05,
-) -> DataFrame:
-    """KS from the shared snapshot profile (one row per
-    (group..., distinct value) with ``__r``/``__c`` counts); the
-    engine persists the profile so the internal multi-consumer reads
-    (bucket bounds, bucket counts, totals) replay a cached frame."""
-    cum = bucketed_cumsums(
-        per_val, value_col, {"__r": "__r_lt", "__c": "__c_lt"},
-        part_cols=group_cols,
-    )
-    tot = per_val.groupBy(*group_cols).agg(
-        F.sum("__r").alias("__tr"), F.sum("__c").alias("__tc")
-    )
-    # try_divide: a one-sided group has __tr or __tc = 0, and ANSI
-    # mode (Spark 4's default; not overridden by session.py) makes
-    # plain / throw; the NULLs land in the one_sided branch below
-    f_ref = F.try_divide(F.col("__r_lt") + F.col("__r"), F.col("__tr"))
-    f_cur = F.try_divide(F.col("__c_lt") + F.col("__c"), F.col("__tc"))
-    # the product as double: __tr * __tc as long*long overflows once
-    # both sides exceed ~3e9 rows (ANSI throws ARITHMETIC_OVERFLOW,
-    # non-ANSI wraps negative -> NaN crit)
-    crit = F.lit(_c_alpha(alpha)) * F.sqrt(
-        F.try_divide(
-            (F.col("__tr") + F.col("__tc")).cast("double"),
-            F.col("__tr").cast("double") * F.col("__tc").cast("double"),
-        )
-    )
-    agg = (
-        cum.join(F.broadcast(tot), group_cols)
-        .groupBy(*group_cols)
-        .agg(
-            F.max("__tr").cast("long").alias("n_ref"),
-            F.max("__tc").cast("long").alias("n_cur"),
-            F.round(F.max(F.abs(f_ref - f_cur)), 6).alias("ks_d"),
-            F.round(F.max(crit), 6).alias("ks_crit"),
-        )
-    )
-    # a group present in only one snapshot (0/0 ECDF, sqrt(x/0) crit
-    # -> NULLs) IS the strongest drift signal: report D = 1, drifted
-    one_sided = (F.col("n_ref") == 0) | (F.col("n_cur") == 0)
-    return agg.select(
-        *group_cols,
-        "n_ref",
-        "n_cur",
-        F.when(one_sided, F.lit(1.0)).otherwise(F.col("ks_d")).alias("ks_d"),
-        "ks_crit",
-        F.when(one_sided, F.lit(1))
-        .otherwise((F.col("ks_d") > F.col("ks_crit")).cast("int"))
-        .alias("drifted"),
+    return drift_report(per_val, value_col, group_cols, alpha=alpha).select(
+        *group_cols, "n_ref", "n_cur", "ks_d", "ks_crit",
+        F.col("ks_drifted").alias("drifted"),
     )

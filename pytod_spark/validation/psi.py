@@ -14,10 +14,12 @@ Rule-of-thumb verdicts: < 0.1 stable, 0.1-0.2 drifting, > 0.2 drifted.
 
 100-TB shape: the row-scale input collapses once into the shared
 per-(group, distinct value) counts profile (validation/profile.py —
-a partial-aggregated hash shuffle that two-sample KS reuses); the
-binning, histogram and PSI reduction then run over that model-sized
-frame (bin depends on the value only, so per-value counts bin exactly
-like per-row values). Nothing row-scale ever shuffles.
+a partial-aggregated hash shuffle that two-sample KS reuses); one
+grouped Arrow kernel then bins each group's distinct values and
+reduces to PSI (profile.drift_report; bin depends on the value only,
+so per-value counts bin exactly like per-row values). The kernel
+holds O(distinct values) of one group in one Python worker; nothing
+row-scale ever reaches Python.
 """
 
 from __future__ import annotations
@@ -25,9 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .profile import snapshot_value_counts
-
-EPS = 1e-6
+from .profile import drift_report, snapshot_value_counts
 
 
 def psi_report(
@@ -39,61 +39,14 @@ def psi_report(
     threshold: float = 0.2,
 ) -> DataFrame:
     """Per-group PSI of ``value_col`` between the rows where ``is_ref``
-    is true (reference snapshot) and the rest (current snapshot).
-    ``group_col`` may be a list (e.g. [partition, feature] in the
-    validation engine's distribution-drift check)."""
+    is true (reference snapshot) and the rest (current snapshot):
+    ``n_ref, n_cur, psi, drifted``. ``group_col`` may be a list (e.g.
+    [partition, feature])."""
     group_cols = [group_col] if isinstance(group_col, str) else list(group_col)
     per_val = snapshot_value_counts(df, is_ref, value_col, group_cols)
-    return psi_report_from_counts(
+    return drift_report(
         per_val, value_col, group_cols, n_bins=n_bins, threshold=threshold
-    )
-
-
-def psi_report_from_counts(
-    per_val: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    n_bins: int = 10,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """PSI from the shared snapshot profile (one row per
-    (group..., distinct value) with ``__r``/``__c`` counts) — the
-    engine persists that profile and feeds PSI and KS from it so the
-    row-scale scan happens once (engine._job_dist_drift)."""
-    ref_val = F.when(F.col("__r") > 0, F.col(value_col))
-    stats = per_val.groupBy(*group_cols).agg(
-        F.min(ref_val).alias("__lo"), F.max(ref_val).alias("__hi")
-    )
-    binned = per_val.join(F.broadcast(stats), group_cols)
-    width = (F.col("__hi") - F.col("__lo")) / n_bins
-    raw_bin = F.floor((F.col(value_col) - F.col("__lo")) / width)
-    # degenerate reference (all values equal -> width 0) puts every
-    # row in bin 0 instead of NaN/Inf bins
-    bin_id = F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
-        F.least(F.greatest(raw_bin, F.lit(0)), F.lit(n_bins - 1))
-    ).cast("int")
-    hist = (
-        binned.withColumn("__bin", bin_id)
-        .groupBy(*group_cols, "__bin")
-        .agg(F.sum("__r").alias("__r"), F.sum("__c").alias("__c"))
-    )
-    tot = hist.groupBy(*group_cols).agg(
-        F.sum("__r").alias("__tr"), F.sum("__c").alias("__tc")
-    )
-    # try_divide (mirroring ks.py): a snapshot missing from a group has
-    # __tr or __tc = 0 and ANSI mode — Spark 4's default — makes plain
-    # division throw DIVIDE_BY_ZERO; try_divide yields NULL, which
-    # F.greatest skips, clamping the proportion to EPS deliberately
-    # rather than by accident of non-ANSI semantics.
-    p = F.greatest(F.try_divide(F.col("__r"), F.col("__tr")), F.lit(EPS))
-    q = F.greatest(F.try_divide(F.col("__c"), F.col("__tc")), F.lit(EPS))
-    return (
-        hist.join(F.broadcast(tot), group_cols)
-        .groupBy(*group_cols)
-        .agg(
-            F.max("__tr").cast("long").alias("n_ref"),
-            F.max("__tc").cast("long").alias("n_cur"),
-            F.round(F.sum((p - q) * F.log(p / q)), 6).alias("psi"),
-        )
-        .withColumn("drifted", (F.col("psi") > threshold).cast("int"))
+    ).select(
+        *group_cols, "n_ref", "n_cur", "psi",
+        F.col("psi_drifted").alias("drifted"),
     )

@@ -299,6 +299,28 @@ def test_ivf_index_check(spark, tmp_path):
     assert not rep["ok"] and rep["n_dup_keys"] == 1
 
 
+def test_ivf_index_check_healthy_when_n_assign_exceeds_clusters(spark, tmp_path):
+    """Each vector lands in min(n_assign, n_clusters) cells; meta must
+    record that, or a healthy index fails its arity check."""
+    e = _emb(spark)
+    ref = str(tmp_path / "ivf")
+    S.ivf_index_build(e, ref, n_clusters=4, n_iters=1, n_assign=6)
+    assert spark.read.parquet(os.path.join(ref, "meta")).first()["n_assign"] == 4
+    assert S.ivf_index_check(spark, ref) == {
+        "n_dup_keys": 0, "n_cell_orphans": 0, "n_bad_arity": 0, "ok": True,
+    }
+
+
+@pytest.mark.parametrize("rows", ["empty", "all_null"])
+def test_ivf_index_build_rejects_no_vectors_before_writing(spark, tmp_path, rows):
+    data = [] if rows == "empty" else [(i, None) for i in range(5)]
+    df = spark.createDataFrame(data, "row_id bigint, features array<double>")
+    ref = str(tmp_path / "ivf")
+    with pytest.raises(ValueError, match="no non-null"):
+        S.ivf_index_build(df, ref, n_clusters=4)
+    assert not os.path.exists(ref)
+
+
 def test_index_catalog_table_refs(spark, tmp_path):
     """The artifact set also lives behind table:/iceberg: catalog refs
     (the lakehouse deployment posture — sources.write_table/ load_table

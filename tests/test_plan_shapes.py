@@ -222,29 +222,47 @@ def test_shuffle_order_window_is_bucket_partitioned(spark, docs):
     assert "BroadcastHashJoin" in p
 
 
-def test_ks_windows_are_bucket_partitioned(spark):
-    """The KS cumulative counts must come from the bucketed two-pass
-    plan — every window partitioned by (group, bucket), and the only
-    broadcast-exchange inputs are the tiny boundary/offset frames."""
-    from pytod_spark.validation.ks import ks_report
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    p = _plan(ks_report(ev, F.col("event_id") % 2 == 0, "value", "event_type"))
-    for frag in p.split("windowspecdefinition(")[1:]:
-        assert frag.startswith("event_type"), f"bad window: {frag[:60]}"
+def _assert_one_kernel_over_the_profile(p: str) -> None:
+    """The PSI/KS plan: one grouped Arrow kernel over the value-counts
+    profile, the profile's partial aggregate below its exchange, and
+    nothing else — no window, no join, no single-partition exchange."""
+    assert p.count("FlatMapGroupsInPandas") == 1
+    kernel = p.index("FlatMapGroupsInPandas")
+    # the exchange feeding the profile's final aggregate, keyed by
+    # (group, value); the kernel's own exchange (group only) sits above
+    profile_xchg = p.index("Exchange hashpartitioning(event_type#", kernel)
+    profile_xchg = p.index("Exchange hashpartitioning(event_type#", profile_xchg + 1)
+    assert kernel < profile_xchg < p.index("partial_sum", profile_xchg)
+    assert "partial_" not in p[:profile_xchg]
+    assert "Window" not in p
+    assert "Join" not in p and "CartesianProduct" not in p
     assert "Exchange SinglePartition" not in p
 
 
-def test_psi_model_joins_broadcast(spark):
-    """PSI's per-group reference min/max is a ~|groups|-row model —
-    it must join back by broadcast, and the row-scale scan must keep
-    map-side combine under the histogram aggregate."""
+def test_ks_is_one_kernel_over_the_profile(spark):
+    """KS's cumulative counts come from the grouped kernel, not from
+    windows: the plan has no Window at all (stronger than the old gate's
+    'every window partitioned by the group'), no join and no
+    single-partition exchange."""
+    from pytod_spark.validation.ks import ks_report
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    _assert_one_kernel_over_the_profile(
+        _plan(ks_report(ev, F.col("event_id") % 2 == 0, "value", "event_type"))
+    )
+
+
+def test_psi_is_one_kernel_over_the_profile(spark):
+    """PSI's per-group reference range is computed inside the kernel,
+    so no model frame joins back at all (the old gate required that
+    join to be a broadcast); the row-scale scan keeps map-side combine
+    under the profile aggregate."""
     from pytod_spark.validation.psi import psi_report
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    p = _plan(psi_report(ev, F.col("event_id") % 2 == 0, "value", "event_type"))
-    assert "BroadcastHashJoin" in p
-    assert "partial_" in p
+    _assert_one_kernel_over_the_profile(
+        _plan(psi_report(ev, F.col("event_id") % 2 == 0, "value", "event_type"))
+    )
 
 
 def test_doc_logprob_dictionary_is_take_ordered(spark, docs):
